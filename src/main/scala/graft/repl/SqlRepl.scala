@@ -3,7 +3,10 @@ package graft.repl
 import java.io.{BufferedReader, InputStreamReader, PrintStream}
 import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, GraftInternal, SparkSession}
+import org.apache.spark.sql.functions.col
+import graft.operators.Staged
 import graft.sinks.CsvExport
 import graft.sources.Ingest
 import graft.{GraftSession, Tables}
@@ -157,6 +160,44 @@ object SqlRepl {
     walk(args.toList, CliConf())
   }
 
+  /** The staged store behind each session's `excel_rows`, so the load
+    * that replaces it can free it. Weak keys and a bare-RDD value (which
+    * does not reference its session): a stopped session is not pinned. */
+  private val stores = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, RDD[_]]())
+
+  /** Parse workbook `f` once into a staged store, check the key against
+    * the store, and register `excel_rows` over it. The store is
+    * hash-partitioned by the key (round-robin under `--no-unique`) into
+    * `defaultParallelism` partitions, so statements run in parallel
+    * instead of in the one task the xlsx source plans per sheet; it is
+    * materialized here by [[Staged.checkpointStage]] (a reliable
+    * checkpoint when `spark.graft.staging.reliable` is set). A failed
+    * check frees the store and leaves any earlier `excel_rows` in place;
+    * a successful load frees the store of the load it replaces. */
+  private def loadWorkbook(spark: SparkSession, c: CliConf, f: String): DataFrame = {
+    val reader = spark.read.format("graft.sources.xlsx.XlsxDataSource")
+      .option("path", f)
+    c.sheet.foreach(s => reader.option("sheet", s))
+    if (c.coerceZero) reader.option("coerce", "zero")
+    val df = reader.load()
+    val keyCols = c.unique.map {
+      case Nil  => Seq(df.columns.head)
+      case cols => cols
+    }
+    val n = spark.sparkContext.defaultParallelism
+    val store = Staged.checkpointStage(
+      keyCols.fold(df.repartition(n))(ks => df.repartition(n, ks.map(col): _*)),
+      eager = true)
+    try keyCols.foreach(ks => Ingest.assertUnique(store, ks))
+    catch { case e: Throwable => GraftInternal.unpersistBackingRdd(store); throw e }
+    store.createOrReplaceTempView("excel_rows")
+    GraftInternal.backingRdd(store).foreach { rdd =>
+      Option(stores.put(spark, rdd)).foreach(_.unpersist(blocking = false))
+    }
+    store
+  }
+
   /** The reference's one workflow in one command
     * (main.rs:25-34, 130-177): `-f file.xlsx -s Sheet1` loads the sheet
     * as table `excel_rows` (the reference's table name, main.rs:181),
@@ -164,24 +205,21 @@ object SqlRepl {
     * `idx_service_name` unique index; `--unique c1,c2` overrides,
     * `--no-unique` disables), then drops into the SQL REPL. Without
     * `-f`, the positional arg is a parquet data dir (graft's native
-    * mode). Separated from `main` so tests can drive it end-to-end. */
+    * mode). Separated from `main` so tests can drive it end-to-end.
+    *
+    * Like the reference's SQLite load (main.rs:179-294), the workbook
+    * is parsed ONCE, here: `excel_rows` is a snapshot taken at load,
+    * and every statement reads the staged store, not the file. Edits
+    * to the file after loading are not seen; run `-f` again to pick
+    * them up. The store lives as long as the session (or until the
+    * next load replaces it), not just this call's read loop. */
   def runCli(args: Array[String], spark: SparkSession,
              in: BufferedReader, out: PrintStream,
              interactive: Boolean = false): Unit = {
     val c = parseArgs(args.toIndexedSeq)
     c.file match {
       case Some(f) =>
-        val reader = spark.read.format("graft.sources.xlsx.XlsxDataSource")
-          .option("path", f)
-        c.sheet.foreach(s => reader.option("sheet", s))
-        if (c.coerceZero) reader.option("coerce", "zero")
-        val df = reader.load()
-        val keyCols = c.unique.map {
-          case Nil  => Seq(df.columns.head)
-          case cols => cols
-        }
-        val checked = keyCols.fold(df)(ks => Ingest.assertUnique(df, ks))
-        checked.createOrReplaceTempView("excel_rows")
+        val df = loadWorkbook(spark, c, f)
         out.println(s"Loaded $f${c.sheet.fold("")(s => s" sheet $s")} " +
           s"as table excel_rows (${df.columns.mkString(", ")})")
       case None =>

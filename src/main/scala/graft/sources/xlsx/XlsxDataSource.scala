@@ -66,12 +66,24 @@ private[xlsx] object XlsxDataSource {
       Option(o.get("inferRows")).map(_.toInt).getOrElse(100))
   }
 
-  /** Pick the target sheets of one workbook. */
-  def targetSheets(zip: ZipFile, conf: XlsxConf): Seq[(String, String)] = {
+  /** The worksheet zip entries to read from workbook `path`: the sheet
+    * named by `conf.sheet`, else the first one. A workbook without that
+    * sheet, or whose sheet points at a missing entry, fails naming the
+    * file and the sheet — skipping it would silently drop its rows. */
+  def targetSheets(zip: ZipFile, path: String, conf: XlsxConf): Seq[String] = {
     val all = XlsxParsing.sheetEntries(zip)
-    conf.sheet match {
+    val picked = conf.sheet match {
       case Some(s) => all.filter(_._1 == s)
       case None    => all.take(1)
+    }
+    if (picked.isEmpty)
+      throw new IllegalArgumentException(
+        s"xlsx: $path has no ${conf.sheet.fold("sheet")(s => s"sheet '$s'")}")
+    picked.map { case (name, sheetPath) =>
+      if (zip.getEntry(sheetPath) == null)
+        throw new IllegalArgumentException(
+          s"xlsx: $path: sheet '$name' points at missing entry $sheetPath")
+      sheetPath
     }
   }
 
@@ -79,9 +91,7 @@ private[xlsx] object XlsxDataSource {
     val zip = new ZipFile(conf.paths.head)
     try {
       val shared = XlsxParsing.sharedStrings(zip)
-      val (_, sheetPath) = targetSheets(zip, conf).headOption.getOrElse(
-        throw new IllegalArgumentException(
-          s"xlsx: sheet ${conf.sheet} not found in ${conf.paths.head}"))
+      val sheetPath = targetSheets(zip, conf.paths.head, conf).head
       val it = XlsxParsing.rows(zip, sheetPath, shared)
       if (!it.hasNext) return StructType(Nil)
       val first = it.next()
@@ -136,8 +146,7 @@ private[xlsx] final case class XlsxScan(
   override def planInputPartitions(): Array[InputPartition] =
     conf.paths.flatMap { p =>
       val zip = new ZipFile(p)
-      try XlsxDataSource.targetSheets(zip, conf)
-        .map { case (_, sp) => XlsxInputPartition(p, sp) }
+      try XlsxDataSource.targetSheets(zip, p, conf).map(XlsxInputPartition(p, _))
       finally zip.close()
     }.toArray
 

@@ -42,10 +42,14 @@ object GraftInternal {
     * blocks as soon as the next round is materialized. No-op for plans
     * that aren't RDD-backed. */
   def unpersistBackingRdd(df: Dataset[_]): Unit =
+    backingRdd(df).foreach(_.unpersist(blocking = false))
+
+  /** The RDD behind a `localCheckpoint`ed / `checkpoint`ed Dataset;
+    * None for plans that aren't RDD-backed. */
+  def backingRdd(df: Dataset[_]): Option[org.apache.spark.rdd.RDD[_]] =
     df.queryExecution.logical match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
+      case lr: org.apache.spark.sql.execution.LogicalRDD => Some(lr.rdd)
+      case _ => None
     }
 
   /** Block until the async listener bus has delivered every queued

@@ -50,6 +50,24 @@ class ReliableStagingSpec extends TestSpark {
     }
   }
 
+  test("reliable staging: the REPL's workbook store answers after the " +
+       "workbook file is deleted") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt3")
+      .toFile.getAbsolutePath
+    spark.sparkContext.setCheckpointDir(dir)
+    spark.conf.set("spark.graft.staging.reliable", "true")
+    try {
+      val (loaded, afterDelete) = ReplSpec.loadThenDelete(spark)
+      assert(afterDelete === loaded)
+      assert(java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+        .anyMatch(java.nio.file.Files.isRegularFile(_)),
+        "the store is a reliable checkpoint in the checkpoint dir")
+    } finally {
+      spark.conf.set("spark.graft.staging.reliable", "false")
+      deleteRec(new java.io.File(dir))
+    }
+  }
+
   test("reliable staging: knn centrality and kmv set ops agree with " +
        "the local-checkpoint default") {
     val emb = Tables(spark, sfDir, "embeddings")

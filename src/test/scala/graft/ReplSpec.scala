@@ -164,9 +164,36 @@ class ReplSpec extends TestSpark {
         new PrintStream(bos, true, "UTF-8"))
       bos.toString("UTF-8")
     }
+    val before = persisted()
     val e = intercept[graft.sources.Ingest.DuplicateKeysException](run(Array()))
     assert(e.nKeys === 1 && e.sample === Seq("checkout"))
+    // the failed load frees the store it staged
+    assert(persisted() -- before === Set.empty)
     assert(run(Array("--no-unique")).contains("as table excel_rows"))
+  }
+
+  private def persisted(): Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  test("a second load replaces excel_rows and frees the first load's " +
+       "store; the read loop's exit frees nothing") {
+    val p = ReplSpec.workbook("cli-reload")
+    val before = persisted()
+    ReplSpec.load(spark, p)
+    val first = persisted() -- before
+    assert(first.size === 1, "the load stages the workbook in one RDD")
+    ReplSpec.load(spark, p)
+    val second = persisted() -- before
+    assert(second.size === 1 && second != first,
+      s"exactly one staged RDD remains: $first then $second")
+    assert(new SqlRepl(spark).runLine(
+      "SELECT count(*) AS n FROM excel_rows").contains("| 200 |"))
+  }
+
+  test("load once: excel_rows keeps answering after the workbook file " +
+       "is deleted") {
+    val (loaded, afterDelete) = ReplSpec.loadThenDelete(spark)
+    assert(afterDelete === loaded)
   }
 
   test("history: \\history lists, !N and !! recall, and the file persists " +
@@ -200,5 +227,50 @@ class ReplSpec extends TestSpark {
     assert(rendered.contains(","))  // 6,005-ish formatted
     val body = Files.readString(java.nio.file.Paths.get(out))
     assert(!body.split("\n")(1).contains(","))
+  }
+}
+
+object ReplSpec {
+  import java.io.{BufferedReader, ByteArrayOutputStream, PrintStream, StringReader}
+  import org.apache.spark.sql.SparkSession
+  import graft.sources.xlsx.XlsxWriter
+
+  /** A 200-row keyed workbook (sheet `Sheet1`) in a new temp dir. */
+  def workbook(prefix: String): String = {
+    val p = new java.io.File(Files.createTempDirectory(prefix).toFile,
+      "wb.xlsx").getAbsolutePath
+    XlsxWriter.write(p, "Sheet1",
+      Seq("service_name", "region", "count") +:
+        (1 to 200).map(i => Seq(f"svc$i%03d", s"r${i % 4}", i * 10)))
+    p
+  }
+
+  /** `runCli -f p -s Sheet1` with empty stdin; returns what it printed. */
+  def load(spark: SparkSession, p: String): String = {
+    val bos = new ByteArrayOutputStream()
+    SqlRepl.runCli(Array("-f", p, "-s", "Sheet1"), spark,
+      new BufferedReader(new StringReader("")),
+      new PrintStream(bos, true, "UTF-8"))
+    bos.toString("UTF-8")
+  }
+
+  /** Load a workbook, run three statements, delete the file and run
+    * them again through a fresh REPL: (before, after) renderings. */
+  def loadThenDelete(spark: SparkSession): (Seq[String], Seq[String]) = {
+    val p = workbook("cli-once")
+    assert(load(spark, p).contains("as table excel_rows"))
+    val stmts = Seq(
+      "SELECT region, count(*) AS n, sum(count) AS s FROM excel_rows " +
+        "GROUP BY region ORDER BY region",
+      "SELECT service_name, count FROM excel_rows WHERE count > 1900 " +
+        "ORDER BY service_name",
+      "SELECT * FROM excel_rows WHERE service_name = 'svc042'")
+    def run(): Seq[String] = {
+      val repl = new SqlRepl(spark)
+      stmts.map(repl.runLine)
+    }
+    val loaded = run()
+    Files.delete(java.nio.file.Paths.get(p))
+    (loaded, run())
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import graft.sources.xlsx.XlsxWriter
 
 class XlsxSourceSpec extends TestSpark {
@@ -86,5 +87,44 @@ class XlsxSourceSpec extends TestSpark {
     assert(df.count() === 6)
     assert(df.select("service_name").as[String].collect().toSet ===
       Set("svc1a", "svc1b", "svc2a", "svc2b", "svc3a", "svc3b"))
+  }
+
+  test("a directory where one workbook lacks the sheet fails the load " +
+       "instead of returning the other workbooks' rows") {
+    val dir = Files.createTempDirectory("xlsx-missing-sheet").toFile
+    val rows = Seq(Seq("service_name", "count"), Seq("svc", 1))
+    XlsxWriter.write(new java.io.File(dir, "a.xlsx").getAbsolutePath, "Sheet1", rows)
+    val b = new java.io.File(dir, "b.xlsx").getAbsolutePath
+    XlsxWriter.write(b, "Other", rows)
+    val df = spark.read.format("graft.sources.xlsx.XlsxDataSource")
+      .option("sheet", "Sheet1").option("path", dir.getAbsolutePath).load()
+    val e = intercept[IllegalArgumentException](df.count())
+    assert(e.getMessage.contains(b) && e.getMessage.contains("Sheet1"),
+      e.getMessage)
+  }
+
+  test("a sheet whose worksheet entry is missing fails naming the file, " +
+       "not with a bare NullPointerException") {
+    import java.util.zip.{ZipFile, ZipOutputStream}
+    val dir = Files.createTempDirectory("xlsx-missing-entry").toFile
+    val whole = new java.io.File(dir, "whole.xlsx").getAbsolutePath
+    XlsxWriter.write(whole, "Sheet1", Seq(Seq("k"), Seq("a")))
+    // the same workbook with its worksheet part left out
+    val broken = new java.io.File(dir, "broken.xlsx").getAbsolutePath
+    val src = new ZipFile(whole)
+    val zos = new ZipOutputStream(new java.io.FileOutputStream(broken))
+    try src.entries().asScala.filterNot(_.getName.contains("worksheets/"))
+      .foreach { en =>
+        zos.putNextEntry(new java.util.zip.ZipEntry(en.getName))
+        zos.write(src.getInputStream(en).readAllBytes())
+        zos.closeEntry()
+      }
+    finally { zos.close(); src.close() }
+    val e = intercept[IllegalArgumentException] {
+      spark.read.format("graft.sources.xlsx.XlsxDataSource")
+        .option("sheet", "Sheet1").option("path", broken).load()
+    }
+    assert(e.getMessage.contains(broken) && e.getMessage.contains("Sheet1"),
+      e.getMessage)
   }
 }
